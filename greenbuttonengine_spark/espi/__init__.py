@@ -4,12 +4,16 @@
 Spark-first layout (contrast with the reference's single-pass Rust loop,
 lib/personalgreenbutton/src/lib.rs:32-233):
 
-    parser    pure-Python per-file XML parse (runs inside mapInPandas)
+    parser    pure-Python per-file XML parse; the one owner of
+              fail-the-file (a failed file yields one error row only)
     schemas   fixed StructTypes for the parse output + TimeSeries
-    source    distributed file scan -> union-typed parse-output DataFrame
-    enum_dim  XSD enum dictionary as a broadcast dim table
+    source    the one Spark read path: binaryFile scan -> parser inside
+              mapInPandas -> union-typed parse-output DataFrame
+    enum_dim  the one owner of the XSD enum dictionary (maps, decode
+              expression, parquet dim)
     dst       DST/tz rule evaluation as native Catalyst expressions
     pipeline  denormalize_and_link as declarative joins + projections
+    fastpath  the same parse + denormalize for one file, without Spark
 """
 
 __all__ = [

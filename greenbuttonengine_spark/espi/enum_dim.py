@@ -1,46 +1,65 @@
-"""ESPI enum dictionary as a broadcast dim table (P10, S7).
+"""ESPI enum dictionary (P10, S7) — the one owner of code -> app_info.
 
 The reference compiles the XSD enum values into a static phf map and
-decodes per row (gb_type_details.rs:8-31).  Spark-first: the dictionary
-is DATA — a 454-row parquet dim (built by tools/build_enum_dim.py from
-the public NAESB espi.xsd) broadcast-joined per enum column.  Codes stay
-ints through every shuffle; strings appear only in the final projection
-— the same "intern until the end" property the reference gets from
-&'static str.
+decodes per row (gb_type_details.rs:8-31).  Here the dictionary is
+DATA, built by tools/build_enum_dim.py from the public NAESB espi.xsd:
+a 454-row parquet dim for Spark readers, and the same rows as JSON,
+which :func:`enum_maps` loads with stdlib ``json`` for both decoders —
+the Spark literal-map decode (:func:`decode_enum_expr`) and the CLI
+fast path (fastpath.py).  Codes stay ints through every shuffle;
+strings appear only in the final projection — the same "intern until
+the end" property the reference gets from &'static str.
+
+Importable without pyspark: the fast path must never load it.
 """
 
 from __future__ import annotations
 
+import json
+from functools import cache
 from pathlib import Path
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+if TYPE_CHECKING:
+    from pyspark.sql import Column, DataFrame, SparkSession
 
-ENUM_DIM_PATH = str(Path(__file__).resolve().parent / "data" / "espi_enum_dim.parquet")
+_DATA = Path(__file__).resolve().parent / "data"
+ENUM_DIM_PATH = str(_DATA / "espi_enum_dim.parquet")
+ENUM_DIM_SCHEMA = (
+    "type string, field string, value int, app_info string, documentation string"
+)
 
 MISSING_APP_INFO = "Missing app info"
 
+# (TimeSeries column, ReadingType XSD field) for every decoded
+# reading-type code; quality decodes separately under scope ''
+ENUM_FIELDS = [
+    ("accumulation_behaviour", "accumulationBehaviour"),
+    ("commodity", "commodity"),
+    ("currency", "currency"),
+    ("data_qualifier", "dataQualifier"),
+    ("flow_direction", "flowDirection"),
+    ("kind", "kind"),
+    ("phase", "phase"),
+    ("uom", "uom"),
+]
+
 
 def load_enum_dim(spark: SparkSession, path: str | None = None) -> DataFrame:
-    return spark.read.parquet(path or ENUM_DIM_PATH)
+    # the fixed schema spares the schema-inference job on every call
+    return spark.read.schema(ENUM_DIM_SCHEMA).parquet(path or ENUM_DIM_PATH)
 
 
-_MAPS_CACHE: dict[tuple[str, str], dict[int, str]] | None = None
-
-
+@cache
 def enum_maps() -> dict[tuple[str, str], dict[int, str]]:
-    """The dictionary as plain Python maps, loaded once per process via
-    pyarrow (no Spark job).  Keyed by (type, field)."""
-    global _MAPS_CACHE
-    if _MAPS_CACHE is None:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(ENUM_DIM_PATH, columns=["type", "field", "value", "app_info"])
-        maps: dict[tuple[str, str], dict[int, str]] = {}
-        for typ, field, value, app_info in zip(*(tbl.column(c).to_pylist() for c in tbl.column_names)):
-            maps.setdefault((typ, field), {})[value] = app_info
-        _MAPS_CACHE = maps
-    return _MAPS_CACHE
+    """The dictionary as plain Python maps, loaded once per process
+    (no Spark job, no pyarrow).  Keyed by (type, field)."""
+    with open(_DATA / "espi_enum_dim.json") as fh:
+        rows = json.load(fh)
+    maps: dict[tuple[str, str], dict[int, str]] = {}
+    for typ, field, value, app_info in rows:
+        maps.setdefault((typ, field), {})[value] = app_info
+    return maps
 
 
 _DECODE_SQL_CACHE: dict[tuple[str, str, str], str] = {}
@@ -70,7 +89,7 @@ def _decode_sql(code_col: str, field: str, scope: str) -> str:
     return _DECODE_SQL_CACHE[key]
 
 
-def decode_enum_expr(code_col: str, field: str, scope: str = "ReadingType"):
+def decode_enum_expr(code_col: str, field: str, scope: str = "ReadingType") -> Column:
     """Enum decode as a literal MAP lookup — the Spark analog of the
     reference's compile-time phf map (gb_type_details.rs:8-31).
 
@@ -78,25 +97,6 @@ def decode_enum_expr(code_col: str, field: str, scope: str = "ReadingType"):
     exchange, no extra stage, evaluates inside whole-stage codegen.
     Unknown / NULL codes -> 'Missing app info' (gb_type_details.rs:24-29).
     """
+    from pyspark.sql import functions as F
+
     return F.expr(_decode_sql(code_col, field, scope))
-
-
-def decode_enum(
-    df: DataFrame,
-    dim: DataFrame,
-    code_col: str,
-    out_col: str,
-    field: str,
-    scope: str = "ReadingType",
-) -> DataFrame:
-    """Decode an int enum-code column to its app_info string via a
-    broadcast join; unknown codes -> 'Missing app info'
-    (gb_type_details.rs:24-29)."""
-    sub = dim.filter((F.col("type") == scope) & (F.col("field") == field)).select(
-        F.col("value").alias("__enum_code"), F.col("app_info").alias("__enum_str")
-    )
-    joined = df.join(F.broadcast(sub), df[code_col] == F.col("__enum_code"), "left")
-    return (
-        joined.withColumn(out_col, F.coalesce(F.col("__enum_str"), F.lit(MISSING_APP_INFO)))
-        .drop("__enum_code", "__enum_str")
-    )

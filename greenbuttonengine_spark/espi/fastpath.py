@@ -15,13 +15,13 @@ same parser output, for ONE file at a time:
 * bit-packed DST rule evaluation + strict-window shift (dst.py,
   local_time_parameters.rs:43-143, lib.rs:157-162),
 * enova provider cost x100 patch (timeseries.rs:173-178),
-* enum decode from the same XSD dictionary (JSON twin of the parquet
-  dim; 'Missing app info' fallback, gb_type_details.rs:24-29),
+* enum decode from enum_dim's dictionary, the same maps the Spark
+  decode reads ('Missing app info' fallback, gb_type_details.rs:24-29),
 * NaN cost sentinel (interval_reading.rs:15-16).
 
-Imports are stdlib-only (json/struct/datetime/calendar): no pyspark,
-no pyarrow, no numpy — a full CSV conversion of the EGD test file runs
-in well under 200 ms including interpreter startup.  pyarrow loads
+Imports are stdlib-only (struct/datetime/calendar, and enum_dim's json
+load): no pyspark, no pyarrow, no numpy — a full CSV conversion of the
+EGD test file runs in well under 200 ms including interpreter startup.  pyarrow loads
 lazily ONLY for --filetype parquet.  The Spark path stays the engine
 for directories/globs/multi-file inputs; pytest pins value parity
 between the two paths on the EGD file and the synthetic multi-provider
@@ -31,13 +31,13 @@ fixtures.
 from __future__ import annotations
 
 import calendar
-import json
 import math
 import struct
 from datetime import date, datetime, timedelta
 from pathlib import Path
 from typing import Any
 
+from .enum_dim import ENUM_FIELDS, MISSING_APP_INFO, enum_maps
 from .schemas import (
     KIND_ENTRY,
     KIND_ERROR,
@@ -47,37 +47,8 @@ from .schemas import (
     TIMESERIES_COLUMNS,
 )
 
-MISSING_APP_INFO = "Missing app info"
-_ENUM_JSON = Path(__file__).resolve().parent / "data" / "espi_enum_dim.json"
-
-_ENUM_FIELDS = [
-    ("accumulation_behaviour", "accumulationBehaviour"),
-    ("commodity", "commodity"),
-    ("currency", "currency"),
-    ("data_qualifier", "dataQualifier"),
-    ("flow_direction", "flowDirection"),
-    ("kind", "kind"),
-    ("phase", "phase"),
-    ("uom", "uom"),
-]
-
-_MAPS: dict[tuple[str, str], dict[int, str]] | None = None
-
-
-def _enum_maps() -> dict[tuple[str, str], dict[int, str]]:
-    global _MAPS
-    if _MAPS is None:
-        with open(_ENUM_JSON) as fh:
-            rows = json.load(fh)
-        maps: dict[tuple[str, str], dict[int, str]] = {}
-        for typ, field, value, app_info in rows:
-            maps.setdefault((typ, field), {})[value] = app_info
-        _MAPS = maps
-    return _MAPS
-
-
 def _decode(scope: str, field: str, code: int | None) -> str:
-    return _enum_maps().get((scope, field), {}).get(code, MISSING_APP_INFO)
+    return enum_maps().get((scope, field), {}).get(code, MISSING_APP_INFO)
 
 
 # ---------------------------------------------------------------------------
@@ -287,7 +258,7 @@ def convert_file(path: str) -> tuple[list[dict[str, Any]], list[str]]:
             "time_period_start_unix": shifted,
             "time_period_duration_seconds": fact["time_period_duration_seconds"],
         }
-        for col, xsd_field in _ENUM_FIELDS:
+        for col, xsd_field in ENUM_FIELDS:
             row[col] = _decode("ReadingType", xsd_field, rt.get(col))
         out.append(row)
     return out, []
@@ -400,7 +371,7 @@ def write_parquet_local(rows: list[dict[str, Any]], out: str, sort: bool = False
         ),
         **{
             c: pa.array([r[c] for r in rows], pa.string())
-            for c, _ in _ENUM_FIELDS
+            for c, _ in ENUM_FIELDS
         },
     }
     pq.write_table(

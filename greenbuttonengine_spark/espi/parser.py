@@ -17,12 +17,14 @@ it is native Catalyst.  Semantics mirror the reference parser:
 * hex-encoded DST rules: src/local_time_parameters.rs:152-159
 
 Row dicts target schemas.PARSED_SCHEMA; a file that fails to parse
-yields a single row_kind='error' row instead of killing the job
-(cli-frontend/src/main.rs:31-38 logs and continues).
+yields a single row_kind='error' row and nothing else, instead of
+killing the job (cli-frontend/src/main.rs:31-38 logs and continues);
+``parse_espi_feed`` is the only place that decision is made.
 """
 
 from __future__ import annotations
 
+import io
 import math
 import re
 import xml.etree.ElementTree as ET
@@ -295,30 +297,25 @@ def _parse_entry(node: ET.Element, entry_index: int) -> list[dict[str, Any]]:
     return rows
 
 
-def iter_espi_stream(source, source_file: str):
-    """Memory-bounded streaming parse (``ET.iterparse``): yields
-    PARSED_SCHEMA row dicts per completed ``<entry>``, never holding more
-    than one entry subtree in memory — the giant-file scale path (a
-    multi-GB provider export parses in O(one entry) executor memory,
-    where ``ET.fromstring`` would hold a DOM ~5-10x the raw bytes).
+def parse_espi_feed(xml_text: str, source_file: str) -> list[dict[str, Any]]:
+    """Parse one ESPI Atom feed into PARSED_SCHEMA row dicts.
 
-    ``source`` is a file-like object (text mode preserves the
-    reference's strict-UTF-8 read: a bad byte raises UnicodeDecodeError
-    mid-stream and becomes the file's error row).
+    The one owner of fail-the-file (lib.rs:32-50, S2 per-file
+    tolerance): a file that fails anywhere — even after valid entries —
+    yields a SINGLE ``row_kind='error'`` row and nothing else, so no
+    downstream table ever sees a failed file's partial rows.  Every
+    reader (batch, streaming bronze, the CLI fast path) parses through
+    here.
 
-    Failure atomicity is RELATIONAL, not buffered: a mid-file error
-    yields a ``row_kind='error'`` row after whatever rows already
-    streamed out, and the denormalize plan anti-joins every table
-    against the error file set (lib.rs:32-50 fail-the-file semantics)
-    — so the parser never needs to retract, and memory stays bounded.
+    ``ET.iterparse`` clears each finished ``<entry>`` from the root, so
+    the DOM holds one entry subtree at a time, not the whole feed.
     """
-    yielded = 0
+    rows: list[dict[str, Any]] = []
     try:
-        it = ET.iterparse(source, events=("start", "end"))
         depth = -1
         entry_index = 0
         root: ET.Element | None = None
-        for event, elem in it:
+        for event, elem in ET.iterparse(io.StringIO(xml_text), events=("start", "end")):
             if event == "start":
                 depth += 1
                 if depth == 0:
@@ -330,32 +327,20 @@ def iter_espi_stream(source, source_file: str):
             if depth == 0 and _local(elem.tag) == "entry":
                 for row in _parse_entry(elem, entry_index):
                     row["source_file"] = source_file
-                    yielded += 1
-                    yield row
+                    rows.append(row)
                 entry_index += 1
                 # drop the finished entry subtree from the root
                 root.clear()
-        if yielded == 0:
+        if not rows:
             # an empty feed would otherwise vanish from every downstream
             # table; the reference errors it at denormalize (lib.rs:46-50)
             raise EspiParseError("Missing LocalTimeParameters.")
     except Exception as ex:  # noqa: BLE001 - error channel, not crash
-        yield {
-            "row_kind": KIND_ERROR,
-            "source_file": source_file,
-            "error": f"{type(ex).__name__}: {ex}",
-        }
-
-
-def parse_espi_feed(xml_text: str, source_file: str) -> list[dict[str, Any]]:
-    """Parse one ESPI Atom feed into PARSED_SCHEMA row dicts.
-
-    A failed file produces a SINGLE error row and nothing else (S2
-    per-file tolerance) — the buffered wrapper over the streaming
-    parser, for callers that already hold the text in memory."""
-    import io
-
-    rows = list(iter_espi_stream(io.StringIO(xml_text), source_file))
-    if rows and rows[-1]["row_kind"] == KIND_ERROR:
-        return [rows[-1]]
+        return [
+            {
+                "row_kind": KIND_ERROR,
+                "source_file": source_file,
+                "error": f"{type(ex).__name__}: {ex}",
+            }
+        ]
     return rows

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dst import apply_local_time_shift, build_dst_dim
-from .enum_dim import decode_enum_expr, load_enum_dim
+from .enum_dim import ENUM_FIELDS, decode_enum_expr, load_enum_dim
 from .schemas import TIMESERIES_COLUMNS
 from .source import read_espi, split_tables
 
@@ -47,17 +47,6 @@ def _pin_utc(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:  # pragma: no cover - static-conf sessions
         pass
-
-_ENUM_FIELDS = [
-    ("accumulation_behaviour", "accumulationBehaviour"),
-    ("commodity", "commodity"),
-    ("currency", "currency"),
-    ("data_qualifier", "dataQualifier"),
-    ("flow_direction", "flowDirection"),
-    ("kind", "kind"),
-    ("phase", "phase"),
-    ("uom", "uom"),
-]
 
 
 def _validate_single_ltp(ltp: DataFrame, all_files: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -274,17 +263,6 @@ def denormalize_with_errors(
     facts = tables["interval_readings"]
     rts = tables["reading_types"]
 
-    # Fail-the-file atomicity for streaming parses: a file that errored
-    # mid-stream (iter_espi_stream) has already emitted partial rows —
-    # anti-join them away here so error files contribute NOTHING to any
-    # table (lib.rs:32-50).  The error set is tiny: broadcast anti-join.
-    err = tables.get("errors")
-    if err is not None:
-        err_files = F.broadcast(err.select("source_file").distinct())
-        entries = entries.join(err_files, "source_file", "left_anti")
-        facts = facts.join(err_files, "source_file", "left_anti")
-        rts = rts.join(err_files, "source_file", "left_anti")
-
     all_files = entries.select("source_file").distinct()
     if strict_single_ltp:
         ltp, ltp_errors = _validate_single_ltp(
@@ -344,7 +322,7 @@ def denormalize_with_errors(
     rt_codes = rts.select(
         "source_file",
         F.col("entry_index").alias("rt_entry_index"),
-        *[c for c, _ in _ENUM_FIELDS if c != "phase"],
+        *[c for c, _ in ENUM_FIELDS if c != "phase"],
         "phase",
         "power_of_ten_multiplier",
     )
@@ -435,7 +413,7 @@ def denormalize_with_errors(
     # Literal map lookups (the phf-map analog), one withColumns pass:
     # no broadcast exchanges, single Catalyst analysis.
     decode_cols = {"quality_str": decode_enum_expr("quality", "QualityOfReading", scope="")}
-    for code_col, xsd_field in _ENUM_FIELDS:
+    for code_col, xsd_field in ENUM_FIELDS:
         decode_cols[f"{code_col}_str"] = decode_enum_expr(code_col, xsd_field)
     decoded = f3.withColumns(decode_cols)
 
@@ -450,13 +428,16 @@ def denormalize_with_errors(
         F.col("tou"),
         F.col("shifted_unix").alias("time_period_start_unix"),
         F.col("time_period_duration_seconds"),
-        *[F.col(f"{c}_str").alias(c) for c, _ in _ENUM_FIELDS],
+        *[F.col(f"{c}_str").alias(c) for c, _ in ENUM_FIELDS],
     ]
     if include_source_file:
         out_cols.insert(0, F.col("source_file"))
     result = decoded.select(*out_cols)
     ordered = ["source_file", *TIMESERIES_COLUMNS] if include_source_file else TIMESERIES_COLUMNS
+    # parse failures arrive already atomic (parser.parse_espi_feed emits
+    # only the error row for a failed file), so they only need folding in
     all_errors = ltp_errors.unionByName(rt_errors)
+    err = tables.get("errors")
     if err is not None:
         all_errors = err.select("source_file", "error").unionByName(all_errors)
     return result.select(*ordered), all_errors

@@ -1,31 +1,14 @@
-"""spark.read.format('espi') — the Python DataSource V2 packaging of the
-parse stage — must agree with the mapInPandas source and feed the same
-pipeline. Also covers provider-quirk fixtures beyond the EGD corpus
+"""The one ESPI read path (``source.read_espi`` -> ``parser.parse_espi_feed``)
+and the one enum dictionary (``enum_dim``).  Covers fail-the-file on the
+production reader, and provider-quirk fixtures beyond the EGD corpus
 (FIXTURES.md §4): multiple IntervalBlocks per content, empty cost tags,
 the enova cost patch with real costs."""
 
 from __future__ import annotations
 
-import math
 import textwrap
 
 import pytest
-
-EGD = "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml"
-
-
-def test_espi_format_matches_mapinpandas_source(spark):
-    from greenbuttonengine_spark.espi.datasource import register_espi_source
-    from greenbuttonengine_spark.espi.source import read_espi
-
-    register_espi_source(spark)
-    via_format = spark.read.format("espi").load(EGD)
-    via_source = read_espi(spark, EGD)
-    assert via_format.count() == via_source.count()
-    assert via_format.schema == via_source.schema
-    kinds_fmt = dict(via_format.groupBy("row_kind").count().collect())
-    kinds_src = dict(via_source.groupBy("row_kind").count().collect())
-    assert kinds_fmt == kinds_src
 
 
 QUIRK_XML = textwrap.dedent("""\
@@ -113,14 +96,12 @@ def test_provider_quirks(spark, tmp_path):
 
 
 def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
-    """A file that fails MID-stream (after valid entries already parsed)
-    must contribute nothing to the timeseries — the streaming parser
-    emits partial rows + an error row, and the denormalize plan
-    anti-joins the partial rows away (fail-the-file, lib.rs:32-50)."""
-    from greenbuttonengine_spark.espi.datasource import register_espi_source
-    from greenbuttonengine_spark.espi.enum_dim import load_enum_dim
-    from greenbuttonengine_spark.espi.pipeline import denormalize_with_errors
-    from greenbuttonengine_spark.espi.source import split_tables
+    """A file that fails MID-feed (after valid entries already parsed)
+    yields exactly one error row from the production reader and
+    contributes nothing to the timeseries (fail-the-file, lib.rs:32-50):
+    the parser alone makes that decision, nothing downstream re-filters."""
+    from greenbuttonengine_spark.espi import timeseries_from_files
+    from greenbuttonengine_spark.espi.source import read_espi
 
     # valid quirk feed, then a final broken entry (unknown payload tag)
     broken = QUIRK_XML.replace(
@@ -135,39 +116,33 @@ def test_streaming_parse_partial_file_atomicity(spark, tmp_path):
     bad = tmp_path / "partial.xml"
     bad.write_text(broken)
 
-    register_espi_source(spark)
-    parsed = spark.read.format("espi").load(str(tmp_path))
-    # streaming source DID emit partial rows for the broken file
-    from pyspark.sql import functions as F
+    parsed = read_espi(spark, str(bad)).collect()
+    assert len(parsed) == 1 and parsed[0].row_kind == "error"
+    assert "Unknown tag name" in parsed[0].error
 
-    bad_rows = parsed.filter(F.col("source_file").contains("partial.xml"))
-    kinds = {r.row_kind for r in bad_rows.collect()}
-    assert "error" in kinds and len(kinds) > 1  # partial rows + error row
-    ts, errors = denormalize_with_errors(split_tables(parsed), load_enum_dim(spark))
+    ts, errors = timeseries_from_files(spark, [str(good), str(bad)])
     errs = errors.collect()
-    assert any("Unknown tag name" in e.error for e in errs)
+    assert len(errs) == 1 and errs[0].source_file.endswith("partial.xml")
+    assert "Unknown tag name" in errs[0].error
     # the broken file contributes nothing; the good file's 2 rows survive
     assert ts.count() == 2
 
 
-def test_streaming_matches_buffered_on_golden_corpus(spark):
-    """iter_espi_stream and the buffered parse agree row-for-row on the
-    reference corpus file."""
-    import io
+def test_enum_json_matches_parquet_dim():
+    """The JSON dictionary both decoders read (enum_dim.enum_maps) must
+    carry exactly the parquet dim's (type, field, value) -> app_info
+    rows, which load_enum_dim and the synthetic golden read."""
+    import pyarrow.parquet as pq
 
-    from greenbuttonengine_spark.espi.parser import iter_espi_stream, parse_espi_feed
+    from greenbuttonengine_spark.espi.enum_dim import ENUM_DIM_PATH, enum_maps
 
-    text = open(EGD).read()
-
-    def norm(rows):  # NaN != NaN breaks plain dict equality
-        return [
-            {k: ("<nan>" if isinstance(v, float) and math.isnan(v) else v) for k, v in r.items()}
-            for r in rows
-        ]
-
-    streamed = norm(iter_espi_stream(io.StringIO(text), EGD))
-    buffered = norm(parse_espi_feed(text, EGD))
-    assert streamed == buffered
+    tbl = pq.read_table(ENUM_DIM_PATH, columns=["type", "field", "value", "app_info"])
+    cols = [tbl.column(c).to_pylist() for c in tbl.column_names]
+    parquet_maps: dict[tuple[str, str], dict[int, str]] = {}
+    for typ, field, value, app_info in zip(*cols):
+        parquet_maps.setdefault((typ, field), {})[value] = app_info
+    assert sum(map(len, parquet_maps.values())) == tbl.num_rows  # keys unique
+    assert enum_maps() == parquet_maps
 
 
 def test_mixed_payload_types_is_file_error(spark, tmp_path):

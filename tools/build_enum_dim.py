@@ -11,9 +11,9 @@ Reimplements the reference's build-time dictionary compilation
   filter value NOT NULL AND (type='ReadingType' OR
   field='QualityOfReading') (build.rs:133-172)
 
-Output: a small parquet dim table consumed at runtime via a broadcast
-join (the Spark analog of the reference's phf static map,
-gb_type_details.rs:8-31).
+Output: a small parquet dim table (``load_enum_dim``) and the same rows
+as JSON, from which espi/enum_dim.py builds the literal-map decode (the
+Spark analog of the reference's phf static map, gb_type_details.rs:8-31).
 
 Usage: python tools/build_enum_dim.py [xsd_path] [out_parquet]
 """
@@ -126,9 +126,11 @@ def main() -> None:
     )
     pq.write_table(table, out_path, compression="snappy")
     print(f"wrote {len(rows)} enum rows -> {out_path}")
-    # JSON twin for the pyspark-/pyarrow-free CLI fast path
-    # (espi/fastpath.py): stdlib json loads in ~1 ms vs ~300 ms for a
-    # pyarrow import, which matters under the <200 ms single-file bar.
+    # The same rows as JSON: espi/enum_dim.py loads its code -> app_info
+    # maps from this file with stdlib json for both the Spark decode and
+    # the CLI fast path.  json loads in ~1 ms vs ~300 ms for a pyarrow
+    # import, which matters under the fast path's <200 ms single-file
+    # bar, and enum_dim must stay importable without pyspark/pyarrow.
     import json
 
     json_path = out_path.with_suffix(".json")
